@@ -186,16 +186,13 @@ object ConfigPipeline {
     * appending duplicates. (The JDBC/DSN target goes through
     * [[applyJdbc]] in a foreachBatch instead — it needs a key.) */
   def sinkStream(df: DataFrame, cfg: GraftConfig): DataStreamWriter[Row] = {
+    val target = cfg.dataTarget.getOrElse(
+      throw new IllegalArgumentException("dataTarget not configured"))
     val w =
       if (cfg.dataTargetProcessType.equalsIgnoreCase("record"))
-        df.writeStream.foreach(new RecordWriter(
-          cfg.dataTarget.getOrElse(
-            throw new IllegalArgumentException("dataTarget not configured")),
-          cfg.dataTargetSeparator))
+        df.writeStream.foreach(new RecordWriter(target, cfg.dataTargetSeparator))
       else
         df.writeStream.foreachBatch { (b: DataFrame, epochId: Long) =>
-          val target = cfg.dataTarget.getOrElse(
-            throw new IllegalArgumentException("dataTarget not configured"))
           b.write.mode("overwrite").partitionBy("target_table")
             .option("sep", cfg.dataTargetSeparator)
             .csv(s"$target/epoch=$epochId")
@@ -206,29 +203,23 @@ object ConfigPipeline {
       w.option("checkpointLocation", s"$p.checkpoint"))
   }
 
-  /** DSN target: per-target-table keyed upsert through the configured
-    * `DSN.<name>.url` JDBC url. Target names (already postfixed) are
-    * the JDBC table names, optionally schema-qualified by
-    * `dataTargetSchema`. The per-table loop is driver-side over the
-    * DISTINCT target tables of the batch (bounded by the source's
-    * table count, not its row count). */
+  /** DSN target: keyed upsert through the configured `DSN.<name>.url`
+    * JDBC url, routed per row by `target_table` (already postfixed),
+    * optionally schema-qualified by `dataTargetSchema`. One
+    * [[JdbcUpsert.applyRouted]] call: a single shuffle reduces the batch
+    * to the terminal change per (target table, key) for every table at
+    * once, and each partition applies its rows in one transaction, so
+    * the micro-batch costs the same jobs however many tables it
+    * touches. A small batch coalesces to one partition and therefore
+    * one connection. */
   def applyJdbc(batch: DataFrame, cfg: GraftConfig, keyCol: String,
       orderCol: String, valueCols: Seq[String]): Unit = {
+    val dsn = cfg.dsn.getOrElse(
+      throw new IllegalArgumentException("DSN not configured"))
     val url = cfg.dsnUrl.getOrElse(throw new IllegalArgumentException(
-      s"DSN '${cfg.dsn.getOrElse("")}' has no DSN.<name>.url mapping"))
-    // persist: the parse→classify→mask lineage would otherwise re-run
-    // for the distinct() AND once per table
-    val cached = batch.persist()
-    try {
-      val tables = cached.select("target_table").distinct()
-        .collect().map(_.getString(0))
-      for (t <- tables) {
-        val name = cfg.dataTargetSchema.map(s => s"$s.$t").getOrElse(t)
-        JdbcUpsert.applyBatch(
-          JdbcUpsert.latestPerKey(
-            cached.filter(col("target_table") === t), keyCol, orderCol),
-          url, name, keyCol, valueCols)
-      }
-    } finally cached.unpersist()
+      s"DSN '$dsn' has no DSN.<name>.url mapping"))
+    val table = cfg.dataTargetSchema.fold(col("target_table"))(s =>
+      concat(lit(s"$s."), col("target_table")))
+    JdbcUpsert.applyRouted(batch, table, url, keyCol, orderCol, valueCols)
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,11 +14,14 @@ import org.apache.spark.sql.functions._
   * with prepared statements — UPDATE-then-INSERT for c/u (an upsert
   * without dialect-specific MERGE), DELETE for d.
   *
-  * Scale notes: the batch is reduced to one terminal change per key
-  * BEFORE touching the database (latestPerKey — one shuffle on the
-  * key), so the JDBC round-trips are bounded by distinct keys, not raw
-  * events; partitions write in parallel with per-partition
-  * connections, the standard JDBC-sink shape. Tests drive an embedded
+  * Scale notes: the batch is reduced to one terminal change per
+  * (target table, key) BEFORE touching the database ([[latestPerKey]]
+  * — one shuffle keyed on both, however many tables the batch routes
+  * to), so the JDBC round-trips are bounded by distinct keys, not raw
+  * events, and a micro-batch costs a fixed number of Spark jobs.
+  * Partitions write in parallel, each in one transaction on its own
+  * connection, the standard JDBC-sink shape; a small batch coalesces
+  * to one partition and so to one connection. Tests drive an embedded
   * Derby (in-memory, same JVM as local executors); any JDBC URL works
   * on a cluster.
   */
@@ -77,14 +80,44 @@ object JdbcUpsert {
         .map(d => d.name -> d).toMap
   }
 
-  /** One terminal change per key: latest (ts, tiebreak) wins. Keeps
-    * deletes — the apply step needs them to issue DELETEs. */
-  def latestPerKey(batch: DataFrame, keyCol: String,
-      orderCol: String): DataFrame = {
-    val w = Window.partitionBy(keyCol).orderBy(desc(orderCol))
+  /** Lifecycle rank of a change: c (and any other op) < u < d. */
+  private def opRank(op: Column): Column =
+    when(op === "d", 2).when(op === "u", 1).otherwise(0)
+
+  /** One terminal change per `keyCols`: the row with the greatest
+    * `orderCol` wins. Ties on `orderCol` go to the greater op rank
+    * (c < u < d, the row lifecycle order), then to the greater value
+    * columns, compared left to right with nulls lowest. The winner is
+    * therefore a function of the batch's rows alone, not of their
+    * partitioning or fetch order, so a retried task writes the same
+    * target state. Rows equal on every compared column write the same
+    * effect, so which of them survives does not matter. Keeps deletes:
+    * the apply step needs them to issue DELETEs. */
+  def latestPerKey(batch: DataFrame, keyCols: Seq[String],
+      orderCol: String, valueCols: Seq[String]): DataFrame = {
+    val w = Window.partitionBy(keyCols.map(col): _*).orderBy(
+      Seq(col(orderCol).desc, opRank(col("op")).desc) ++
+        valueCols.map(c => col(c).desc_nulls_last): _*)
     batch.withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1).drop("_rn")
   }
+
+  /** Routed keyed upsert: applies a batch of raw change rows (`op`,
+    * `keyCol`, `orderCol` and `valueCols`) to the keyed JDBC table that
+    * `table` names for each row. The batch is reduced to one terminal
+    * change per (table, key) by [[latestPerKey]] in ONE shuffle keyed
+    * on both, whatever the number of tables, and each partition of the
+    * reduced batch is applied by one writer in one transaction that
+    * may span tables. A micro-batch therefore costs a fixed number of
+    * Spark jobs (the shuffle's map stage plus the result stage), and
+    * JDBC round-trips are bounded by distinct keys, not raw events. A
+    * small batch coalesces (adaptive execution) to one partition and
+    * so to one connection. */
+  def applyRouted(batch: DataFrame, table: Column, url: String,
+      keyCol: String, orderCol: String, valueCols: Seq[String],
+      dialect: Option[TargetDialect] = None): Unit =
+    write(latestPerKey(batch.withColumn("_t", table), Seq("_t", keyCol),
+      orderCol, valueCols), col("_t"), url, keyCol, valueCols, dialect)
 
   /** Apply a reduced batch of change rows to a keyed JDBC table.
     * Expected columns: `op` (c|u|d), the key, and `valueCols`. Row
@@ -94,44 +127,69 @@ object JdbcUpsert {
     * safe (the statements are idempotent per key). */
   def applyBatch(batch: DataFrame, url: String, table: String,
       keyCol: String, valueCols: Seq[String],
-      dialect: Option[TargetDialect] = None): Unit = {
-    val cols = Seq("op", keyCol) ++ valueCols
-    val upsertSql = dialect.flatMap(_.nativeUpsert)
-      .map(f => f(table, keyCol, valueCols))
-    batch.select(cols.map(col): _*).foreachPartition { it: Iterator[Row] =>
+      dialect: Option[TargetDialect] = None): Unit =
+    write(batch, lit(table), url, keyCol, valueCols, dialect)
+
+  /** foreachBatch adapter: reduce to the terminal change per key, then
+    * apply — `stream.writeStream.foreachBatch(JdbcUpsert.sink(url,
+    * table, key, order, values)).start()`. */
+  def sink(url: String, table: String, keyCol: String, orderCol: String,
+      valueCols: Seq[String],
+      dialect: Option[TargetDialect] = None): (DataFrame, Long) => Unit =
+    (batch: DataFrame, _: Long) =>
+      applyRouted(batch, lit(table), url, keyCol, orderCol, valueCols, dialect)
+
+  /** The one JDBC write loop: applies each row of `batch` to the
+    * table that `table` names for it. Each partition opens one
+    * connection and runs ONE transaction over all its rows, whatever
+    * tables they name; a table's statements are prepared the first
+    * time one of its rows needs them. */
+  private def write(batch: DataFrame, table: Column, url: String,
+      keyCol: String, valueCols: Seq[String],
+      dialect: Option[TargetDialect]): Unit = {
+    val native = dialect.flatMap(_.nativeUpsert)
+    val rows = batch.select(Seq(table, col("op"), col(keyCol)) ++
+      valueCols.map(col): _*)
+    rows.foreachPartition { it: Iterator[Row] =>
       if (it.nonEmpty) {
         val conn = java.sql.DriverManager.getConnection(url)
-        var stmts = List.empty[java.sql.PreparedStatement]
+        var opened = List.empty[java.sql.PreparedStatement]
+        def prepare(sql: String) = {
+          val s = conn.prepareStatement(sql)
+          opened ::= s
+          s
+        }
+        final class Statements(table: String) {
+          lazy val update = prepare(s"UPDATE $table SET " +
+            valueCols.map(c => s"$c = ?").mkString(", ") + s" WHERE $keyCol = ?")
+          lazy val insert = prepare(native.fold(
+            s"INSERT INTO $table ($keyCol, ${valueCols.mkString(", ")}) " +
+              s"VALUES (?${", ?" * valueCols.size})")(
+            f => f(table, keyCol, valueCols)))
+          lazy val delete = prepare(s"DELETE FROM $table WHERE $keyCol = ?")
+        }
+        val byTable = scala.collection.mutable.HashMap.empty[String, Statements]
         try {
           conn.setAutoCommit(false)
-          val setExpr = valueCols.map(c => s"$c = ?").mkString(", ")
-          val upd = conn.prepareStatement(
-            s"UPDATE $table SET $setExpr WHERE $keyCol = ?")
-          val ins = conn.prepareStatement(upsertSql.getOrElse(
-            s"INSERT INTO $table ($keyCol, ${valueCols.mkString(", ")}) " +
-              s"VALUES (?${", ?" * valueCols.size})"))
-          val del = conn.prepareStatement(
-            s"DELETE FROM $table WHERE $keyCol = ?")
-          stmts = List(upd, ins, del)
           it.foreach { r =>
-            val op = r.getString(0)
-            val key = r.get(1)
-            if (op == "d") {
-              del.setObject(1, key)
-              del.executeUpdate()
-            } else if (upsertSql.isDefined) {
+            val t = r.getString(0)
+            val s = byTable.getOrElseUpdate(t, new Statements(t))
+            val key = r.get(2)
+            def insert(): Unit = {
+              s.insert.setObject(1, key)
+              valueCols.indices.foreach(i => s.insert.setObject(i + 2, r.get(i + 3)))
+              s.insert.executeUpdate()
+            }
+            if (r.getString(1) == "d") {
+              s.delete.setObject(1, key)
+              s.delete.executeUpdate()
+            } else if (native.isDefined) {
               // native upsert: one round-trip per change
-              ins.setObject(1, key)
-              valueCols.indices.foreach(i => ins.setObject(i + 2, r.get(i + 2)))
-              ins.executeUpdate()
+              insert()
             } else {
-              valueCols.indices.foreach(i => upd.setObject(i + 1, r.get(i + 2)))
-              upd.setObject(valueCols.size + 1, key)
-              if (upd.executeUpdate() == 0) {
-                ins.setObject(1, key)
-                valueCols.indices.foreach(i => ins.setObject(i + 2, r.get(i + 2)))
-                ins.executeUpdate()
-              }
+              valueCols.indices.foreach(i => s.update.setObject(i + 1, r.get(i + 3)))
+              s.update.setObject(valueCols.size + 1, key)
+              if (s.update.executeUpdate() == 0) insert()
             }
           }
           conn.commit()
@@ -145,21 +203,11 @@ object JdbcUpsert {
             catch { case s: java.sql.SQLException => e.addSuppressed(s) }
             throw e
         } finally {
-          stmts.foreach(s =>
+          opened.foreach(s =>
             try s.close() catch { case _: java.sql.SQLException => () })
           conn.close()
         }
       }
     }
   }
-
-  /** foreachBatch adapter: reduce to the terminal change per key, then
-    * apply — `stream.writeStream.foreachBatch(JdbcUpsert.sink(url,
-    * table, key, order, values)).start()`. */
-  def sink(url: String, table: String, keyCol: String, orderCol: String,
-      valueCols: Seq[String],
-      dialect: Option[TargetDialect] = None): (DataFrame, Long) => Unit =
-    (batch: DataFrame, _: Long) =>
-      applyBatch(latestPerKey(batch, keyCol, orderCol),
-        url, table, keyCol, valueCols, dialect)
 }

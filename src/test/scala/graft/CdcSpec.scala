@@ -223,6 +223,55 @@ class CdcSpec extends SparkSpec {
     val back = spark.read.format("jdbc")
       .option("url", url).option("dbtable", "tgt").load().count()
     assert(back == 0L, "partial batch must be rolled back, not committed")
+    // the transaction spans tables: good rows for rb_a, then a poison
+    // row for rb_b, in ONE partition (a sorted shuffle partition writes
+    // rb_a first) must leave neither table with any effect
+    val c2 = java.sql.DriverManager.getConnection(url)
+    try Seq("rb_a", "rb_b").foreach(t => c2.createStatement().execute(
+      s"CREATE TABLE $t (id BIGINT PRIMARY KEY, v DOUBLE NOT NULL)"))
+    finally c2.close()
+    val routed = Seq(("rb_a", 1L, Some(10.0), "c", 1L),
+      ("rb_a", 2L, Some(20.0), "c", 2L), ("rb_b", 3L, None, "c", 3L))
+      .toDF("tbl", "id", "v", "op", "ts_ms")
+    val parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try intercept[org.apache.spark.SparkException] {
+      JdbcUpsert.applyRouted(routed, col("tbl"), url, "id", "ts_ms", Seq("v"))
+    } finally spark.conf.set("spark.sql.shuffle.partitions", parts)
+    for (t <- Seq("rb_a", "rb_b")) {
+      val n = spark.read.format("jdbc")
+        .option("url", url).option("dbtable", t).load().count()
+      assert(n == 0L, s"$t kept $n rows of a failed cross-table transaction")
+    }
+  }
+
+  test("JDBC sink resolves equal-timestamp changes the same under any partitioning") {
+    import graft.streaming.JdbcUpsert
+    Class.forName("org.apache.derby.jdbc.EmbeddedDriver")
+    val url = "jdbc:derby:memory:graftties;create=true"
+    val c = java.sql.DriverManager.getConnection(url)
+    try c.createStatement().execute(
+      "CREATE TABLE target (id BIGINT PRIMARY KEY, v DOUBLE)")
+    finally c.close()
+    // ties on ts_ms go to the greater op rank (c < u < d), then to the
+    // greater value; a later ts_ms beats both
+    val tied = Seq(
+      (1L, 10.0, "c", 5L), (1L, 30.0, "u", 5L), (1L, 20.0, "u", 5L),
+      (2L, 1.0, "c", 3L), (2L, 2.0, "u", 3L), (2L, 0.0, "d", 3L),
+      (3L, 7.0, "c", 1L), (3L, 8.0, "c", 1L),
+      (4L, 4.0, "u", 9L), (4L, 99.0, "d", 2L))
+    def applied(batch: org.apache.spark.sql.DataFrame): Map[Long, Double] = {
+      val d = java.sql.DriverManager.getConnection(url)
+      try d.createStatement().execute("DELETE FROM target") finally d.close()
+      JdbcUpsert.sink(url, "target", "id", "ts_ms", Seq("v"))(batch, 0L)
+      spark.read.format("jdbc")
+        .option("url", url).option("dbtable", "target").load()
+        .select("id", "v").as[(Long, Double)].collect().toMap
+    }
+    val one = applied(tied.toDF("id", "v", "op", "ts_ms").repartition(1))
+    val four = applied(tied.reverse.toDF("id", "v", "op", "ts_ms").repartition(4))
+    assert(one == four, s"repartition(1): $one, reversed repartition(4): $four")
+    assert(one == Map(1L -> 30.0, 3L -> 8.0, 4L -> 4.0), s"target: $one")
   }
 
   test("JDBC keyed-target sink applies APPEND/UPDATE/DELETE like the batch upsert") {

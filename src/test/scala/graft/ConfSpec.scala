@@ -48,11 +48,57 @@ class ConfSpec extends SparkSpec {
     (GraftConfig.load(s"$dir/config.properties"), dir)
   }
 
-  /** Envelope JSON for (id, name) rows of one table. */
+  /** Envelope JSON for (id, name) creates of one table. */
   private def envelope(table: String, rows: Seq[(Long, String)]) =
-    rows.toDF("id", "full_name").select(Envelope.wrap(
-      lit(null).cast(rowSchema), struct(col("id"), col("full_name")),
-      "graft", table, lit("c"), lit(1L)).as("value"))
+    changes(table, rows.map { case (id, name) => ("c", 1L, id, name) })
+
+  /** Envelope JSON for (op, ts_ms, id, name) changes of one table; a
+    * delete carries its row in `before`, any other op in `after`. */
+  private def changes(table: String, rows: Seq[(String, Long, Long, String)]) = {
+    val row = struct(col("id"), col("full_name"))
+    val none = lit(null).cast(rowSchema)
+    val isDelete = col("op") === "d"
+    rows.toDF("op", "ts_ms", "id", "full_name").select(Envelope.wrap(
+      when(isDelete, row).otherwise(none), when(isDelete, none).otherwise(row),
+      "graft", table, col("op"), col("ts_ms")).as("value"))
+  }
+
+  /** Spark jobs started by `f`. A sentinel job in its own group runs
+    * after `f`; listener events arrive in order, so once the sentinel
+    * is seen every job of `f` has been counted. */
+  private def jobsStartedBy(f: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"counted-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(g) if g == group => jobs.incrementAndGet()
+          case Some(g) if g == s"$group-end" => flushed.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-end", "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def derby(url: String)(statements: String*): Unit = {
+    val c = java.sql.DriverManager.getConnection(url)
+    try statements.foreach(c.createStatement().execute) finally c.close()
+  }
+
+  private def targetRows(url: String, table: String): Map[Long, String] =
+    spark.read.format("jdbc").option("url", url).option("dbtable", table)
+      .load().select("id", "full_name").as[(Long, String)].collect().toMap
 
   test("properties file alone assembles exclude+mask+route (reference names)") {
     val (cfg, _) = makeConfig("dataTargetProcessType=batch")
@@ -172,5 +218,84 @@ class ConfSpec extends SparkSpec {
         .takeWhile(_.next()).map(r => (r.getLong(1), r.getString(2))).toSeq
       assert(got == Seq((1L, "ADA LOVELACE"), (2L, "ALAN TURING")))
     } finally conn.close()
+  }
+
+  test("DSN target routes c/u/d of two tables into schema-qualified targets") {
+    Class.forName("org.apache.derby.jdbc.EmbeddedDriver")
+    val url = "jdbc:derby:memory:graftroute;create=true"
+    val (cfg, _) = makeConfig(
+      s"""DSN=routedsn
+         |DSN.routedsn.url=$url
+         |dataTargetSchema=replica""".stripMargin)
+    derby(url)("CREATE SCHEMA replica",
+      "CREATE TABLE replica.users_masked (id BIGINT PRIMARY KEY, full_name VARCHAR(64))",
+      "CREATE TABLE replica.staff_masked (id BIGINT PRIMARY KEY, full_name VARCHAR(64))")
+    val log = Map(
+      "users" -> Seq(("c", 1L, 1L, "ada lovelace"), ("c", 2L, 2L, "alan turing"),
+        ("u", 3L, 1L, "ada king"), ("d", 4L, 2L, "alan turing"),
+        ("c", 5L, 3L, "grace hopper")),
+      "staff" -> Seq(("c", 1L, 1L, "edsger dijkstra"), ("c", 2L, 4L, "barbara liskov"),
+        ("u", 3L, 1L, "edsger w dijkstra"), ("d", 4L, 4L, "barbara liskov")))
+    val batch = ConfigPipeline.assemble(
+      log.map { case (t, rows) => changes(t, rows) }.reduce(_ union _),
+      rowSchema, cfg, ConfigPipeline.library(cfg))
+    // the latest non-deleted change per key, masked by the library rule
+    val expected = log.map { case (t, rows) =>
+      s"replica.${t}_masked" -> rows.groupBy(_._3).values.map(_.maxBy(_._2))
+        .filter(_._1 != "d").map(r => r._3 -> r._4.toUpperCase).toMap
+    }
+    ConfigPipeline.applyJdbc(batch, cfg, "id", "ts_ms", Seq("full_name"))
+    val got = expected.keys.map(t => t -> targetRows(url, t)).toMap
+    assert(got == expected)
+    // idempotent replay (a retried micro-batch): the state does not move
+    ConfigPipeline.applyJdbc(batch, cfg, "id", "ts_ms", Seq("full_name"))
+    assert(expected.keys.map(t => t -> targetRows(url, t)).toMap == got)
+  }
+
+  test("DSN apply starts the same jobs for one target table as for three, caching nothing") {
+    Class.forName("org.apache.derby.jdbc.EmbeddedDriver")
+    val url = "jdbc:derby:memory:graftjobs;create=true"
+    val (cfg, _) = makeConfig(
+      s"""DSN=jobsdsn
+         |DSN.jobsdsn.url=$url""".stripMargin)
+    val tables = Seq("a", "b", "c")
+    derby(url)(tables.map(t =>
+      s"CREATE TABLE ${t}_masked (id BIGINT PRIMARY KEY, full_name VARCHAR(64))"): _*)
+    def batch(ts: Seq[String]) = ConfigPipeline.assemble(
+      ts.map(t => changes(t, Seq(("c", 1L, 1L, s"$t one"), ("u", 2L, 1L, s"$t two"),
+        ("c", 3L, 2L, s"$t three")))).reduce(_ union _),
+      rowSchema, cfg, ConfigPipeline.library(cfg))
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val one = jobsStartedBy(
+      ConfigPipeline.applyJdbc(batch(tables.take(1)), cfg, "id", "ts_ms", Seq("full_name")))
+    val three = jobsStartedBy(
+      ConfigPipeline.applyJdbc(batch(tables), cfg, "id", "ts_ms", Seq("full_name")))
+    assert(one == three && three <= 2, s"jobs: 1 table -> $one, 3 tables -> $three")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore,
+      "applyJdbc left RDDs persisted")
+    assert(tables.map(t => targetRows(url, s"${t}_masked")) ==
+      tables.map(t => Map(1L -> s"${t.toUpperCase} TWO", 2L -> s"${t.toUpperCase} THREE")))
+  }
+
+  test("sink misconfiguration fails fast, naming the setting at fault") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val (cfg, _) = makeConfig("dataTargetProcessType=batch")
+    implicit val sqlCtx = spark.sqlContext
+    val stream = ConfigPipeline.assemble(MemoryStream[String].toDF()
+      .select(col("value")), rowSchema, cfg, ConfigPipeline.library(cfg))
+    // the micro-batch file branch: rejected when the writer is built,
+    // not inside the first trigger
+    val noTarget = intercept[IllegalArgumentException](
+      ConfigPipeline.sinkStream(stream, cfg.copy(dataTarget = None)))
+    assert(noTarget.getMessage.contains("dataTarget"), noTarget.getMessage)
+    val batch = ConfigPipeline.assemble(envelope("users", Seq((1L, "ada lovelace"))),
+      rowSchema, cfg, ConfigPipeline.library(cfg))
+    val noDsn = intercept[IllegalArgumentException](
+      ConfigPipeline.applyJdbc(batch, cfg, "id", "ts_ms", Seq("full_name")))
+    assert(noDsn.getMessage == "DSN not configured", noDsn.getMessage)
+    val noUrl = intercept[IllegalArgumentException](ConfigPipeline.applyJdbc(
+      batch, cfg.copy(dsn = Some("nourl")), "id", "ts_ms", Seq("full_name")))
+    assert(noUrl.getMessage.contains("'nourl'") &&
+      noUrl.getMessage.contains("DSN.<name>.url"), noUrl.getMessage)
   }
 }
