@@ -69,11 +69,16 @@ object Tables {
     * `spark.graft.checkpoint.reliable=true` (plus
     * `sc.setCheckpointDir` on durable storage) and every hot site
     * flips to storage-backed checkpoints with no code edits
-    * (R13OpsSpec pins both paths result-equal). */
+    * (R13OpsSpec pins both paths result-equal). Reliable mode with no
+    * checkpoint dir fails fast, naming the setting. */
   def cut(df: DataFrame, eager: Boolean = true): DataFrame =
     if (df.sparkSession.conf.getOption("spark.graft.checkpoint.reliable")
-        .contains("true")) df.checkpoint(eager)
-    else df.localCheckpoint(eager)
+        .contains("true")) {
+      require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
+        "spark.graft.checkpoint.reliable=true needs a checkpoint " +
+          "directory: call sparkContext.setCheckpointDir on durable storage")
+      df.checkpoint(eager)
+    } else df.localCheckpoint(eager)
 
   /** Content fingerprint for write-once layout caches (q26's buckets,
     * the partitioned-docs layout): md5 over the source dir path PLUS

@@ -846,7 +846,9 @@ object Dedup extends QueryModule {
     * Implementation: iterative min-label propagation. Each round every
     * node takes the min of its own and its neighbors' labels (one
     * shuffle join + one hash-agg); rounds = component diameter (near-
-    * dup clusters are dense, diameter 1–3), bounded by maxIter.
+    * dup clusters are dense, diameter 1–3), bounded by maxIter — a
+    * round that still changes labels at the cap throws rather than
+    * return unconverged labels.
     * `localCheckpoint` cuts the growing lineage each round — the
     * standard Spark iterative-graph shape (at 100 TB you would use
     * large-star/small-star to bound skew on giant components; the
@@ -886,8 +888,10 @@ object Dedup extends QueryModule {
     var prevSum = BigDecimal(Long.MaxValue) * BigDecimal(Long.MaxValue)
     var curSum = lblSum(labels)
     var iter = 0
-    while (curSum < prevSum && iter < maxIter) {
-      val t0 = System.nanoTime()
+    while (curSum < prevSum) {
+      if (iter == maxIter) throw new IllegalStateException(
+        s"components: labels still changing after $iter rounds " +
+          s"(maxIter = $maxIter); refusing to return unconverged labels")
       // neighbor-min: l'(v) = min(l(v), min over neighbors' labels)
       val neighbor = edges.join(labels, edges("d2") === labels("doc_id"))
         .select(edges("d1").as("doc_id"), col("lbl"))
@@ -903,11 +907,8 @@ object Dedup extends QueryModule {
       labels = checkpoint(l.join(propagated.withColumnRenamed("lbl", "_l2"),
           l("_l") === propagated("doc_id"))
         .select(col("_v").as("doc_id"), col("_l2").as("lbl")))
-      val t1 = System.nanoTime()
       prevSum = curSum
       curSum = lblSum(labels)
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(f"  cc round $iter: prop ${(t1 - t0) / 1e9}%.2f s, sum ${(System.nanoTime() - t1) / 1e9}%.2f s")
       iter += 1
     }
     // isolated docs label themselves; AQE broadcasts the (small)
@@ -926,90 +927,104 @@ object Dedup extends QueryModule {
 
   // ------------------------------------------- dedup_components_star
   /** Large-star/small-star contraction (Kiveris et al., "Connected
-    * Components in MapReduce and Beyond", SoCC '14) — the skew-bounded
-    * alternative to [[components]]' pointer jumping, for graphs with
-    * giant components. Pointer jumping funnels a whole component's
-    * rows through its min-label key every round; star contraction's
-    * per-round unit is the NEIGHBORHOOD MIN (a combiner-friendly
-    * hash-agg — a billion-spoke hub partial-aggregates map-side) and
-    * the join fan-out only ever re-emits existing edges, so no single
-    * key's reduce input exceeds its degree and AQE skew-split can cut
-    * even that.
+    * Components in MapReduce and Beyond", SoCC '14) — the alternative
+    * to [[components]]' pointer jumping for graphs with giant
+    * components. Pointer jumping funnels a whole component's rows
+    * through its min-label key every round; here no key's reduce input
+    * ever exceeds its degree.
     *
-    * Per round on the symmetric directed edge set E:
-    *   large-star: m(u) = min(Γ(u) ∪ u); E ← {(v, m(u)) : v ∈ Γ(u),
-    *     v > u}, re-symmetrized — hangs every larger neighbor under
-    *     the local min, halving star depth for big-id chains;
-    *   small-star: on the larger→smaller view {(u,v) : v < u},
-    *     m(u) = min targets; E ← {(v, m(u))} ∪ {(u, m(u))} — folds
-    *     the smaller neighbors flat.
-    * Both preserve connectivity; the pair strictly decreases a
-    * potential until E is a union of min-rooted stars (O(log² n)
-    * rounds worst case, 2–3 on near-dup graphs). Convergence = the
-    * canonical larger→smaller edge set is unchanged over a full
-    * round (count + anti-join — exact, no checksum collisions). */
+    * State: the canonical (u > v) edge set C — each undirected edge
+    * once, distinct, lazily cut every round. One round is four jobs:
+    *  1. Neighbourhood frame. The symmetric view C ∪ flip(C) (flipped
+    *     rows have u < v, so they never collide with C) under ONE
+    *     window partitioned by u gives every row m(u) = least(min Γ(u),
+    *     u) and max Γ(u). The frame is cut lazily; its exchange is the
+    *     round's first job.
+    *  2. Convergence test, read off the cut frame in the job that
+    *     materializes it, at the top of the round before any
+    *     contraction work: C is a forest of min-rooted stars exactly
+    *     when every vertex with a smaller neighbour has exactly one
+    *     neighbour (min Γ = max Γ). Then for every edge u > v, v is
+    *     u's only neighbour, and v has no smaller neighbour (it would
+    *     be v's only one, yet u is another), so every edge joins a leaf
+    *     to a root smaller than all its leaves: the component minimum.
+    *     The converse is immediate. "No vertex has both a smaller and a
+    *     larger neighbour" alone is NOT enough: {5–1, 5–3} passes it. An
+    *     empty or already-star input therefore costs no contraction,
+    *     and no confirmation round follows the last one that changed C.
+    *  3. Large-star from the same frame: rows with v > u emit
+    *     (v, m(u)), canonical already (v > u ≥ m(u)); repartition by u
+    *     and `distinct` in that one exchange.
+    *  4. Small-star on that output: m = min(v) over a window
+    *     partitioned by u (the repartition serves it) emits (v, m) and
+    *     (u, m); `distinct` is the round's last exchange, then the cut.
+    * Both steps preserve connectivity and together strictly decrease a
+    * potential until the test passes: O(log² n) rounds worst case; the
+    * near-dup graphs take 2 contraction rounds at sf0.01 and 4 at
+    * sf0.1, so a call costs 1 + 4·rounds + 2 jobs. A round cap of
+    * `maxIter` contraction rounds throws rather than return
+    * unconverged labels.
+    *
+    * Skew trade-off: both windows keep "no key's reduce input exceeds
+    * its degree", and window buffers spill to disk, but AQE skew-join
+    * splitting, which a join-based round can use, does not apply to a
+    * window: a hub's whole neighbourhood runs as ONE task. That task
+    * is bounded by the hub's degree, never by its component's size.
+    *
+    * `checkpoint` cuts the frame and the state (default: lazy
+    * [[graft.Tables.cut]]); pass a reliable checkpoint off a single
+    * JVM (see [[components]]). */
   def componentsStar(docs: DataFrame, pairs: DataFrame, maxIter: Int = 40,
       checkpoint: DataFrame => DataFrame = graft.Tables.cut(_, eager = false))
       : DataFrame = {
-    // lazy checkpoints: the per-round convergence probe materializes
-    // the round's edge set in the same job (see [[components]])
-    //
-    // STATE IS THE CANONICAL (u > v) EDGE SET — half the rows of the
-    // symmetric set the r12 version iterated. canon(sym(X)) ≡
-    // canonical(X) for any raw pair emission X (each (a,b), a≠b,
-    // contributes exactly the directed edge (max,min) either way), so
-    // the two per-round distinct()s now dedup the HALF-width canonical
-    // frame instead of the doubled symmetric one, and the symmetric
-    // view is rebuilt per use by a zero-shuffle union with the flipped
-    // copy — two distinct canonical rows can never collide after
-    // flipping (u>v vs u<v are disjoint), so the union needs no
-    // re-dedup.
-    def canonical(e: DataFrame): DataFrame =
-      e.select(greatest(col("u"), col("v")).as("u"),
-          least(col("u"), col("v")).as("v"))
-        .where(col("u") =!= col("v")).distinct()
-    def symView(c: DataFrame): DataFrame =
-      c.union(c.select(col("v").as("u"), col("u").as("v")))
-    var cEdges = checkpoint(canonical(
-      pairs.select(col("d1").as("u"), col("d2").as("v"))))
+    val byU = Window.partitionBy("u")
+    var cEdges = checkpoint(pairs
+      .select(greatest(col("d1"), col("d2")).as("u"),
+        least(col("d1"), col("d2")).as("v"))
+      .where(col("u") =!= col("v")).distinct())
     var iter = 0
-    var converged = cEdges.isEmpty
-    while (!converged && iter < maxIter) {
-      // large-star over the full symmetric set
-      val edges = symView(cEdges)
-      val mLarge = edges.groupBy("u").agg(min(col("v")).as("_mn"))
-        .select(col("u"), least(col("_mn"), col("u")).as("m"))
-      // the larger→smaller view of large-star's output IS its
-      // canonical form (s = canon(sym(raw)) = canonical(raw))
-      val s = canonical(edges.join(mLarge, "u")
-        .where(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v")))
-      // small-star over the larger→smaller view
-      val mSmall = s.groupBy("u").agg(min(col("v")).as("m"))
-      val afterSmall = checkpoint(canonical(
-        s.join(mSmall, "u")
+    var converged = false
+    while (!converged) {
+      val frame = checkpoint(
+        cEdges.union(cEdges.select(col("v").as("u"), col("u").as("v")))
+          .select(col("u"), col("v"),
+            least(min(col("v")).over(byU), col("u")).as("m"),
+            max(col("v")).over(byU).as("mx")))
+      converged =
+        !anyRow(frame.where(col("m") < col("u") && col("mx") =!= col("m")))
+      if (!converged) {
+        if (iter == maxIter) throw new IllegalStateException(
+          s"componentsStar: edge set is still no star forest after " +
+            s"$iter contraction rounds (maxIter = $maxIter); refusing " +
+            "to return unconverged labels")
+        val large = frame.where(col("v") > col("u"))
           .select(col("v").as("u"), col("m").as("v"))
-          .union(mSmall.select(col("u"), col("m").as("v")))))
-      // ONE job for the convergence probe: the canonical sets are
-      // equal iff no (u,v) lands on a single side of the tagged union
-      // (both inputs are distinct sets, so the per-side sums are 0/1)
-      converged = cEdges
-        .select(col("u"), col("v"), lit(1L).as("_a"), lit(0L).as("_b"))
-        .union(afterSmall
-          .select(col("u"), col("v"), lit(0L).as("_a"), lit(1L).as("_b")))
-        .groupBy("u", "v")
-        .agg(sum(col("_a")).as("_na"), sum(col("_b")).as("_nb"))
-        .filter(col("_na") =!= col("_nb"))
-        .isEmpty
-      cEdges = afterSmall
-      iter += 1
+          .repartition(col("u")).distinct()
+          .withColumn("m", min(col("v")).over(byU))
+        cEdges = checkpoint(large
+          .select(explode(array(
+            struct(col("v").as("u"), col("m").as("v")),
+            struct(col("u"), col("m").as("v")))).as("e"))
+          .select(col("e.u").as("u"), col("e.v").as("v"))
+          .where(col("u") =!= col("v")).distinct())
+        iter += 1
+      }
     }
-    // converged: every non-root points straight at its component min
+    // every non-root points straight at its component min
     val lbls = cEdges.select(col("u").as("doc_id"), col("v").as("lbl"))
     docs.select(col("doc_id"))
       .join(lbls.withColumnRenamed("lbl", "_lbl"), Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("_lbl"), col("doc_id")).as("lbl"))
   }
+
+  /** True when `df` has a row, in ONE job over every partition — so a
+    * lazy cut under `df` is fully materialized by that same job
+    * (`isEmpty`'s incremental `take` would leave partitions for a
+    * second checkpoint job). */
+  private def anyRow(df: DataFrame): Boolean =
+    df.sparkSession.sparkContext.runJob(df.queryExecution.toRdd,
+      (rows: Iterator[org.apache.spark.sql.catalyst.InternalRow]) =>
+        rows.hasNext).contains(true)
 
   /** Driver key: the SAME component census as `dedup_components`, but
     * computed by star contraction — the oracle (recursive-CTE

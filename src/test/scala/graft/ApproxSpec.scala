@@ -125,22 +125,93 @@ class ApproxSpec extends SparkSpec {
     assert(lbl == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L, 6L -> 6L))
   }
 
+  private def hubGraph = {
+    val hub = (1L to 400L).map(i => (0L, i))
+    val up = (500L until 524L).map(i => (i, i + 1))
+    val down = (581L to 600L).map(i => (i, i - 1))
+    (((0L to 400L) ++ (500L to 524L) ++ (580L to 600L) :+ 999L)
+      .toDF("doc_id"), (hub ++ up ++ down).toDF("d1", "d2"))
+  }
+
   test("star contraction matches pointer jumping on a skewed hub graph") {
     // the skew case pointer jumping funnels through one min-label key:
     // a 400-spoke hub, an ascending chain, a DESCENDING-id chain (the
     // large-star stress shape), and an isolated node — both algorithms
     // must emit identical min-labels for every node
-    val hub = (1L to 400L).map(i => (0L, i))
-    val up = (500L until 524L).map(i => (i, i + 1))
-    val down = (581L to 600L).map(i => (i, i - 1))
-    val pairs = (hub ++ up ++ down).toDF("d1", "d2")
-    val nodes = ((0L to 400L) ++ (500L to 524L) ++ (580L to 600L) :+ 999L)
-      .toDF("doc_id")
+    val (nodes, pairs) = hubGraph
     val pj = Dedup.components(nodes, pairs).as[(Long, Long)].collect().toMap
     val st = Dedup.componentsStar(nodes, pairs).as[(Long, Long)].collect().toMap
     assert(st == pj)
     assert(st(400L) == 0L && st(524L) == 500L && st(581L) == 580L
       && st(999L) == 999L)
+    // star labels (exactly one row per node) and pointer-jumping labels
+    def both(nodes: Seq[Long], pairs: Seq[(Long, Long)]) = {
+      val n = nodes.toDF("doc_id"); val p = pairs.toDF("d1", "d2")
+      val st = Dedup.componentsStar(n, p).as[(Long, Long)].collect()
+      assert(st.length == nodes.size, s"${st.length} label rows")
+      (st.toMap, Dedup.components(n, p).as[(Long, Long)].collect().toMap)
+    }
+    // seeded random graphs with self-loops, duplicate and reversed pairs
+    (1 to 5).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      val raw = Seq.fill(45)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
+      val pairs = raw ++ raw.take(10) ++ raw.take(10).map(_.swap) ++
+        (0L until 60L by 13L).map(i => (i, i))
+      val (s, p) = both(0L until 70L, pairs)
+      assert(s == p, s"seed $seed")
+    }
+    // an empty pair set: every node labels itself
+    assert(both(Seq(1L, 2L), Nil) == ((Map(1L -> 1L, 2L -> 2L), Map(1L -> 1L, 2L -> 2L))))
+    // no vertex has both a smaller and a larger neighbour, yet 5 and 6
+    // each hang under two roots: not a star forest, so it must contract
+    val (bs, bp) = both(1L to 6L, Seq((1L, 5L), (3L, 5L), (2L, 6L), (3L, 6L)))
+    assert(bs == bp && bs.values.toSet == Set(1L, 4L))
+  }
+
+  test("star contraction returns a min-rooted star forest input after " +
+      "zero contraction rounds") {
+    // the checkpoint hook cuts the initial state and one neighbourhood
+    // frame per round; each contraction round would add a state cut
+    // and another frame
+    var cuts = 0
+    val counted = (df: org.apache.spark.sql.DataFrame) => {
+      cuts += 1; Tables.cut(df, eager = false)
+    }
+    val pairs = (Seq((1L, 2L), (3L, 1L), (1L, 9L)) ++ Seq((4L, 7L), (8L, 4L)))
+      .toDF("d1", "d2")
+    val lbl = Dedup.componentsStar((1L to 10L).toDF("doc_id"), pairs,
+        checkpoint = counted).as[(Long, Long)].collect().toMap
+    assert(lbl == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 1L, 4L -> 4L,
+      7L -> 4L, 8L -> 4L, 5L -> 5L, 6L -> 6L, 10L -> 10L))
+    assert(cuts == 2, s"$cuts cuts: a star forest must need no contraction")
+  }
+
+  test("star contraction on the hub graph stays within its job budget") {
+    // a round is four jobs: the frame's exchange, the convergence test
+    // over the cut frame, the large-star exchange and the small-star
+    // distinct. Here: 1 (initial state) + 4 × 5 rounds + 2 (final
+    // frame and test) + 2 (collect) = 25 jobs; a round with a separate
+    // convergence probe plus a final confirmation round ran 56.
+    val (nodes, pairs) = hubGraph
+    val jobs = jobsStartedBy(Dedup.componentsStar(nodes, pairs).collect())
+    assert(jobs <= 28, s"componentsStar ran $jobs jobs")
+  }
+
+  test("both components loops fail closed at the iteration cap") {
+    val nodes = (1L to 20L).toDF("doc_id")
+    val chain = (2L to 20L).map(i => (i, i - 1)).toDF("d1", "d2")
+    Seq[(String, () => Unit)](
+      "components" -> (() => Dedup.components(nodes, chain, maxIter = 1)),
+      "componentsStar" -> (() => Dedup.componentsStar(nodes, chain, maxIter = 1))
+    ).foreach { case (name, run) =>
+      val e = intercept[IllegalStateException](run())
+      assert(e.getMessage.startsWith(name) &&
+        e.getMessage.contains("maxIter = 1") &&
+        e.getMessage.contains("after 1 "), e.getMessage)
+    }
+    // the uncapped default converges on the same chain
+    assert(Dedup.componentsStar(nodes, chain).as[(Long, Long)].collect()
+      .forall(_._2 == 1L))
   }
 
   test("image decode is a REAL codec round-trip (javax.imageio)") {

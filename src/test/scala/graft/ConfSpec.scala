@@ -63,34 +63,6 @@ class ConfSpec extends SparkSpec {
       "graft", table, col("op"), col("ts_ms")).as("value"))
   }
 
-  /** Spark jobs started by `f`. A sentinel job in its own group runs
-    * after `f`; listener events arrive in order, so once the sentinel
-    * is seen every job of `f` has been counted. */
-  private def jobsStartedBy(f: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"counted-${java.util.UUID.randomUUID}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(g) if g == group => jobs.incrementAndGet()
-          case Some(g) if g == s"$group-end" => flushed.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      try f finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-end", "sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
-
   private def derby(url: String)(statements: String*): Unit = {
     val c = java.sql.DriverManager.getConnection(url)
     try statements.foreach(c.createStatement().execute) finally c.close()

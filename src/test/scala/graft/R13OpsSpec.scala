@@ -28,17 +28,35 @@ class R13OpsSpec extends SparkSpec {
     val docs = (1L to 40L).toDF("doc_id")
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (10L, 1L))
       .toDF("d1", "d2")
-    val base = graft.dedup.Dedup.components(docs, pairs)
-      .collect().map(_.toString).sorted.toSeq
+    val loops = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "components" -> (() => graft.dedup.Dedup.components(docs, pairs)),
+      "componentsStar" -> (() => graft.dedup.Dedup.componentsStar(docs, pairs)))
+    val base = loops.map { case (_, run) =>
+      run().collect().map(_.toString).sorted.toSeq }
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
     spark.sparkContext.setCheckpointDir(dir.toString)
     spark.conf.set("spark.graft.checkpoint.reliable", "true")
-    try {
-      val rel = graft.dedup.Dedup.components(docs, pairs)
-        .collect().map(_.toString).sorted.toSeq
-      assert(rel == base,
-        "reliable checkpoints must not change component labels")
+    try loops.zip(base).foreach { case ((name, run), want) =>
+      assert(run().collect().map(_.toString).sorted.toSeq == want,
+        s"reliable checkpoints must not change $name labels")
     } finally spark.conf.unset("spark.graft.checkpoint.reliable")
+  }
+
+  test("reliable cuts with no checkpoint dir fail fast, naming the " +
+      "setting") {
+    val sc = spark.sparkContext
+    val saved = sc.getCheckpointDir
+    sc.setCheckpointDir(null)
+    spark.conf.set("spark.graft.checkpoint.reliable", "true")
+    try {
+      val e = intercept[IllegalArgumentException](
+        Tables.cut(spark.range(3).toDF(), eager = false))
+      assert(e.getMessage.contains("spark.graft.checkpoint.reliable"),
+        e.getMessage)
+    } finally {
+      spark.conf.unset("spark.graft.checkpoint.reliable")
+      saved.foreach(sc.setCheckpointDir)
+    }
   }
 
   test("reportSort sits only on dimension-bounded frames: every key " +
